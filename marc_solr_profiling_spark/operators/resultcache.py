@@ -37,6 +37,14 @@ class CachedSearcher:
     """LRU page server over one index snapshot."""
 
     def __init__(self, index, size: int = 512, window: int = 80):
+        from ..plans.multifield import MultiFieldIndex
+
+        if isinstance(index, MultiFieldIndex):
+            # wand_topk looks up unprefixed terms, so a field-prefixed
+            # dictionary would answer every request with an empty page
+            raise ValueError(
+                "CachedSearcher serves single-field indexes only; query a "
+                "multifield index with dismax_topk / solr_select_physical")
         self.index = index
         self.size = int(size)
         self.window = int(window)
@@ -98,14 +106,21 @@ class SearcherManager:
     (``plans/generations.py append_delta`` / ``maybe_compact``), opens a
     fresh searcher over the new chain head and AUTOWARMS it from the
     retiring searcher's most-recently-used request signatures BEFORE the
-    swap (``solrconfig.xml:38-43`` ``autowarmCount``) — so the first
-    page requests after a commit hit the warmed window instead of
-    re-running the kernel.
+    swap — so the first page requests after a commit hit the warmed
+    window instead of re-running the kernel.
+
+    Autowarm is the Solr mechanism modelled here (``autowarmCount`` on
+    the query-result cache), not a copy of the reference's setting: the
+    reference config ships ``autowarmCount="0"`` (``solrconfig.xml:38-43``),
+    i.e. cold caches after every commit, while ``autowarm_count`` here
+    defaults to 16. Likewise the reference handler's edismax ``tie`` is
+    0.01, while this package's dismax paths default to ``tie=0.1``.
 
     The warm cost is bounded: ``autowarm_count`` kernel runs of
-    ``window`` rows each, exactly Solr's regeneration bill. The swap is
-    atomic from the caller's perspective (``searcher`` returns the old
-    fully-serving instance until ``commit`` finishes warming)."""
+    ``window`` rows each. The swap is atomic from the caller's
+    perspective (``searcher`` returns the old fully-serving instance
+    until ``commit`` finishes warming). Single-field indexes only: a
+    multifield index raises ``ValueError``."""
 
     def __init__(self, index, size: int = 512, window: int = 80,
                  autowarm_count: int = 16):

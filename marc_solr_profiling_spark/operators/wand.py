@@ -145,6 +145,20 @@ def _drop_del_rows(sub: "pd.DataFrame") -> "pd.DataFrame":
     return sub[sub["term"] != DEL_TERM]
 
 
+def _no_hits(spark) -> DataFrame:
+    return spark.createDataFrame([], "doc_id long, score double")
+
+
+def _with_urls(topk: DataFrame, index) -> DataFrame:
+    """Attach each hit's url from ONE read of the docs stage (indexes
+    keyed on a non-url column have no url there: hits pass unchanged)."""
+    docs = index.docs
+    if "url" not in docs.columns:
+        return topk
+    return (topk.join(docs.select("doc_id", "url"), "doc_id", "left")
+            .orderBy(F.desc("score"), F.asc("doc_id")))
+
+
 def _analyze_query(query: str, chain: str) -> List[str]:
     out: List[str] = []
     for t in ANALYZERS[chain](query):
@@ -596,15 +610,14 @@ def wand_topk(
     ex_terms = (_analyze_query(exclude_query, index.chain)
                 if exclude_query else [])
     ex_set = set(ex_terms)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not qterms:
-        return empty
+        return _no_hits(spark)
     drows = index.cached_dictionary().filter(
         F.col("term").isin(qterms)
     ).collect()
     # (few terms: a literal In is fine here; the batch path broadcast-joins)
     if not drows:
-        return empty
+        return _no_hits(spark)
     boosts: dict[str, float] = {}
     if term_boosts:
         for raw, w in term_boosts.items():
@@ -617,7 +630,7 @@ def wand_topk(
         # matches no doc that survives; drop it from the scoring set
     }
     if not idf_by_term:
-        return empty
+        return _no_hits(spark)
     avgdl = index.avgdl
     kk = int(k)
     mm = parse_mm_spec(min_match, len(qterms))
@@ -765,11 +778,7 @@ def wand_topk(
         score, schema="doc_id long, score double"
     )
     topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if with_url and "url" in index.docs.columns:
-        # indexes keyed on a non-url column have no url in the docs stage
-        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk
+    return _with_urls(topk, index) if with_url else topk
 
 
 
@@ -810,15 +819,14 @@ def dismax_topk(
     spark = index.spark
     sep = getattr(index, "sep", "\x1f")
     qterms = _analyze_query(query, index.chain)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not qterms:
-        return empty
+        return _no_hits(spark)
     keys = [f + sep + t for f in qf for t in qterms]
     drows = index.cached_dictionary().filter(
         F.col("term").isin(keys)
     ).collect()
     if not drows:
-        return empty
+        return _no_hits(spark)
     group_of: dict[str, int] = {}
     idf_by_term: dict[str, float] = {}
     avgdl_by_term: dict[str, float] = {}
@@ -904,10 +912,7 @@ def dismax_topk(
         score, schema="doc_id long, score double"
     )
     topk = candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
-    if with_url and "url" in index.docs.columns:
-        topk = topk.join(index.docs.select("doc_id", "url"), "doc_id", "left")
-        topk = topk.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk
+    return _with_urls(topk, index) if with_url else topk
 
 
 def wand_topk_batch(

@@ -135,17 +135,21 @@ def _dedup_delta(delta_docs: DataFrame, key_col: str) -> DataFrame:
     two same-key rows in one batch would BOTH get fresh doc ids while
     only the pre-batch id is tombstoned, breaking upsert-by-key
     uniqueness until some later append. Latest ``warc_ts`` wins when the
-    column is present (re-crawled page semantics); otherwise an
-    arbitrary-but-single row via dropDuplicates."""
-    if "warc_ts" in delta_docs.columns:
-        from pyspark.sql import Window
+    column is present (re-crawled page semantics). Remaining ties go to
+    a stable hash of the whole row: each stage commit re-evaluates this
+    plan, and every one of them must keep the SAME survivor for a key
+    (an arbitrary pick could send one row to ``tf`` and its twin to
+    ``docs``)."""
+    from pyspark.sql import Window
 
-        w = Window.partitionBy(key_col).orderBy(
-            F.desc_nulls_last("warc_ts"))
-        return (delta_docs
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
-    return delta_docs.dropDuplicates([key_col])
+    order = ([F.desc_nulls_last("warc_ts")]
+             if "warc_ts" in delta_docs.columns else [])
+    # to_json: hash expressions reject map columns; JSON text does not
+    row_hash = F.xxhash64(F.to_json(F.struct(*delta_docs.columns)))
+    w = Window.partitionBy(key_col).orderBy(*order, row_hash)
+    return (delta_docs
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 def _key_expr(df: DataFrame, key_col: str):

@@ -26,7 +26,7 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def config_fingerprint(conf: dict[str, Any]) -> str:
@@ -146,6 +146,11 @@ class IndexStore:
 
             with ThreadPoolExecutor(max_workers=min(16, len(names) or 1)) as ex:
                 lineage = list(ex.map(_footer, enumerate(names)))
+            duration = round(time.time() - t_start, 3)
+            # the one footer-inference read of this stage: its schema is
+            # recorded so every later read_stage skips inference (a
+            # one-task Spark job per read otherwise)
+            published = spark.read.parquet(out)
             with self._lock:
                 m = self._read_manifest()
                 m["stages"][stage] = {
@@ -153,16 +158,25 @@ class IndexStore:
                     # stage metrics next to the per-partition lineage rows:
                     # wall duration + output volume (the Iceberg snapshot
                     # summary analog — added-files/records/size)
-                    "duration_sec": round(time.time() - t_start, 3),
+                    "duration_sec": duration,
                     "rows": int(sum(x["rows"] for x in lineage)),
                     "bytes": int(sum(x["bytes"] for x in lineage)),
                     "partitions": lineage,
+                    "schema": published.schema.json(),
                 }
                 self._write_manifest(m)
-        return spark.read.parquet(self.stage_path(stage))
+            return published
+        return self.read_stage(spark, stage)
 
     def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self.stage_path(stage))
+        """The committed stage, read with the schema its manifest entry
+        recorded at commit — no footer-inference job. Entries committed
+        before schemas were recorded fall back to inference."""
+        schema = self._read_manifest()["stages"].get(stage, {}).get("schema")
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self.stage_path(stage))
 
     def lineage(self) -> dict:
         return self._read_manifest()

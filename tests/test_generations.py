@@ -536,3 +536,25 @@ def test_append_dedups_same_key_within_delta(spark, workdir, docs):
                       delta_docs=delta2, key_col="url")
     assert g2.docs.filter(F.col("url") == dup_url).count() == 1
     assert g2.n_docs == 50
+
+
+def test_dedup_delta_tiebreak_is_deterministic(spark):
+    """Same key AND same warc_ts: every stage commit re-evaluates the
+    dedup, so the survivor must not depend on row order — a hash of the
+    whole row breaks the tie (with or without a warc_ts column)."""
+    from marc_solr_profiling_spark.plans.generations import _dedup_delta
+
+    rows = [("site/p/1", "stale body crabapple", "2024-01-01 00:00:00"),
+            ("site/p/1", "fresh body dragonfruit", "2024-01-01 00:00:00"),
+            ("site/p/2", "other page", "2024-01-01 00:00:00")]
+    for cols in (["url", "text", "warc_ts"], ["url", "text"]):
+        picks = set()
+        for order in (rows, rows[::-1]):
+            df = spark.createDataFrame(
+                order, "url string, text string, warc_ts string",
+            ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+            out = _dedup_delta(df.select(*cols).coalesce(1), "url")
+            got = {r["url"]: r["text"] for r in out.collect()}
+            assert len(got) == 2 and got["site/p/2"] == "other page"
+            picks.add(got["site/p/1"])
+        assert len(picks) == 1, (cols, picks)

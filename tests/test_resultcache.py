@@ -196,3 +196,24 @@ def test_streaming_commit_drives_searcher_manager(spark, tmp_path):
     assert sm.searcher.stats.misses == 1
     sm.search("voyage", 0, 5)
     assert sm.searcher.stats.hits == 1
+
+
+def test_multifield_index_is_refused(spark, tmp_path):
+    """wand_topk cannot read a field-prefixed dictionary: handing a
+    multifield index to the cache layer must fail loudly, not serve
+    empty pages."""
+    from marc_solr_profiling_spark.plans.multifield import (
+        build_multifield_index,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(40)
+    mf = build_multifield_index(
+        spark, docs, str(tmp_path / "mf"),
+        fields=[("title", 6), ("body", None)], key_col="doc_id",
+        id_col="doc_id", text_col="text", chain="simple", n_salts=4,
+        block_size=32,
+    )
+    with pytest.raises(ValueError, match="multifield"):
+        rc.CachedSearcher(mf)
+    with pytest.raises(ValueError, match="multifield"):
+        rc.SearcherManager(mf)

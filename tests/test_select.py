@@ -430,3 +430,14 @@ def test_cursor_mark_through_select(spark, docs, tmp_path):
         gp.extend(r.docs.collect())
         cur = r.next_cursor_mark
     assert [r["doc_id"] for r in gp] == [r["doc_id"] for r in want]
+
+    # an empty page echoes the cursor that was sent, "*" included — Solr's
+    # exhausted-cursor signal (nextCursorMark == cursorMark)
+    past_end = (-1, 0)
+    for sent, q in (("*", "zzqxabsent"), (past_end, Q)):
+        lr = solr_select(docs, q, rows=10, sort=sort, cursor_mark=sent)
+        pr = solr_select_physical(idx, meta, q, rows=10, sort=sort,
+                                  cursor_mark=sent)
+        for r in (lr, pr):
+            assert r.docs.count() == 0
+            assert r.next_cursor_mark == sent
